@@ -128,7 +128,10 @@ final class WeightedDataFrame private[core] (val df: DataFrame, val weightName: 
     * `(col_x, col_y, corr)` with all k² cells — `frame.py:253-285`. One
     * aggregate pass over the data (the reference runs one full pass per
     * pair); the long format is the scale-friendly shape (k² rows, not a
-    * driver-side matrix).
+    * driver-side matrix). Frames wider than
+    * [[WeightedDataFrame.wideCorrThreshold]] take the melted path, whose
+    * aggregate state is 7 moments per (col_x, col_y) group instead of one
+    * 7·k(k+1)/2-double buffer.
     */
   def corr(minPeriods: Int = 1, ddof: Int = 1, method: String = "pearson"): DataFrame = {
     requirePearson(method)
@@ -137,21 +140,31 @@ final class WeightedDataFrame private[core] (val df: DataFrame, val weightName: 
     else corrMelted(minPeriods, ddof)
   }
 
-  /** k² cells as one aggregate pass with 7 sub-aggregates per cell — the
-    * right plan for the reference's k≈10 frames (no row amplification),
-    * but Catalyst planning is O(k²) EXPRESSIONS, which explodes past a
-    * couple hundred columns. [[corr]] switches paths on
-    * [[WeightedDataFrame.wideCorrThreshold]]. */
+  /** k² cells from ONE [[PairMoments]] aggregate: a single scan, no row
+    * amplification, and O(k) plan expressions at any width. */
   private[graft] def corrNarrow(minPeriods: Int = 1, ddof: Int = 1): DataFrame =
-    pairwise("corr", (x, y) => WeightedMoments.corrExpr(x, y, w, ddof, minPeriods))
+    narrowCells("corr", PairMoments.corr(_, ddof, minPeriods))
+
+  /** The narrow long format: the [[PairMoments]] cells of the numeric
+    * columns, exploded in frame column order (x-major), with `stat`
+    * projected from each cell's moments. */
+  private def narrowCells(name: String, stat: Column => Column): DataFrame = {
+    val cols = numericCols
+    val names = typedlit(cols)
+    df.agg(PairMoments.column(cols.map(nc), w).as("cells"))
+      .select(explode(col("cells")).as("cell"))
+      .select(names(col("cell.i")).as("col_x"), names(col("cell.j")).as("col_y"),
+        stat(col("cell")).as(name))
+  }
 
   /** Wide-frame path: MELT each row to k (name, value) structs and explode
     * twice into (x, y, w) pair rows, then ONE 7-moment hash aggregate with
     * k² groups. Planning is O(k) expressions regardless of width; execution
     * streams n·k² pair rows through partial aggregation (map-side combine
     * collapses each task to ≤ k² moment rows before the single exchange) —
-    * the same FLOPs as the narrow path, organized as rows instead of
-    * expressions. Numerics are IDENTICAL: both paths end in
+    * the same FLOPs as the narrow path, with the moments spread over k²
+    * small aggregation groups instead of one 7·k(k+1)/2-double buffer.
+    * Numerics are IDENTICAL: both paths end in
     * [[WeightedMoments.corrFromMoments]]. */
   /** The melted pair rows (one per row × colX × colY) and their joint-
     * validity predicate — shared by [[corrMelted]] and [[covMelted]]. */
@@ -236,16 +249,7 @@ final class WeightedDataFrame private[core] (val df: DataFrame, val weightName: 
     else covMelted(ddof)
 
   private[graft] def covNarrow(ddof: Int = 1): DataFrame =
-    pairwise("cov", (x, y) => WeightedMoments.covExpr(x, y, w, ddof))
-
-  private def pairwise(name: String, f: (Column, Column) => Column): DataFrame = {
-    val cols = numericCols
-    val cells = for { x <- cols; y <- cols } yield
-      struct(lit(x).as("col_x"), lit(y).as("col_y"), f(nc(x), nc(y)).as(name))
-    agg1(Seq(array(cells: _*).as("cells")))
-      .select(explode(col("cells")).as("cell"))
-      .select(col("cell.col_x"), col("cell.col_y"), col(s"cell.$name"))
-  }
+    narrowCells("cov", PairMoments.cov(_, ddof))
 
   /** Local k×k correlation matrix for API parity with the reference's
     * DataFrame return (small k; collect of a k²-row result). */
@@ -481,11 +485,13 @@ object WeightedDataFrame {
     * test tables; construction fails fast if it would). */
   val WeightCol = "__wt__"
 
-  /** Width above which [[WeightedDataFrame.corr]] switches from the k²-
-    * expression single-pass plan to the melted O(k)-planning plan: past a
-    * couple hundred columns Catalyst spends longer PLANNING 7k² aggregate
-    * expressions than executing them (240k expressions at k=200). 16 keeps
-    * the reference-sized frames (k≈10) on the no-amplification plan. */
+  /** Width above which `corr`/`cov` switch from the narrow [[PairMoments]]
+    * plan to the melted plan. Both plan in O(k) expressions; they differ in
+    * aggregation state: the narrow buffer is 7·k(k+1)/2 doubles per group
+    * (952 at k=16, held and serialized whole for every group), the melted
+    * one 7 moments per (group, col_x, col_y) key at the cost of k² pair rows
+    * per input row. 16 keeps the reference-sized frames (k≈10) on the
+    * no-amplification plan. */
   val wideCorrThreshold = 16
 
   private[core] def isNumeric(dt: DataType): Boolean = dt match {

@@ -92,6 +92,9 @@ final class WeightedGroupBy private[core] (
   /** Per-group pairwise weighted Pearson, long format
     * `(keys…, col_x, col_y, corr)` — `frame.py:630-660`. One shuffle total
     * (the reference iterates groups in Python, one pass per group per pair).
+    * Past [[WeightedDataFrame.wideCorrThreshold]] columns it takes
+    * [[corrMelted]], which keeps 7 moments per (group, col_x, col_y) key
+    * instead of one 7·k(k+1)/2-double buffer per group.
     */
   def corr(minPeriods: Int = 1, ddof: Int = 1, method: String = "pearson"): DataFrame = {
     WeightedDataFrame.requirePearson(method)
@@ -100,20 +103,22 @@ final class WeightedGroupBy private[core] (
     else corrMelted(minPeriods, ddof)
   }
 
-  /** k² cells per group in one aggregate pass — O(k²) PLANNING, the right
-    * plan at reference width; [[corr]] switches to [[corrMelted]] past
-    * [[WeightedDataFrame.wideCorrThreshold]] (same cliff as the ungrouped
-    * path). */
-  private[graft] def corrNarrow(minPeriods: Int = 1, ddof: Int = 1): DataFrame = {
-    requireKeysFree(Seq("cells", "cell", "col_x", "col_y", "corr"))
+  /** k² cells per group from ONE [[PairMoments]] aggregate — O(k) plan
+    * expressions, no row amplification. */
+  private[graft] def corrNarrow(minPeriods: Int = 1, ddof: Int = 1): DataFrame =
+    narrowCells("corr", PairMoments.corr(_, ddof, minPeriods))
+
+  /** The grouped narrow long format: per group, the [[PairMoments]] cells
+    * of the numeric columns, exploded and projected through `stat`. */
+  private def narrowCells(name: String, stat: Column => Column): DataFrame = {
+    requireKeysFree(Seq("cells", "cell", "col_x", "col_y", name))
     val cols = numericAggCols
-    val cells = for { x <- cols; y <- cols } yield
-      struct(lit(x).as("col_x"), lit(y).as("col_y"),
-        WeightedMoments.corrExpr(nc(x), nc(y), w, ddof, minPeriods).as("corr"))
-    val agged = base.groupBy(keys.map(col): _*).agg(array(cells: _*).as("cells"))
-    val out = agged
+    val names = typedlit(cols)
+    val out = base.groupBy(keys.map(col): _*)
+      .agg(PairMoments.column(cols.map(nc), w).as("cells"))
       .select(keys.map(col) :+ explode(col("cells")).as("cell"): _*)
-      .select(keys.map(col) ++ Seq(col("cell.col_x"), col("cell.col_y"), col("cell.corr")): _*)
+      .select(keys.map(col) ++ Seq(names(col("cell.i")).as("col_x"),
+        names(col("cell.j")).as("col_y"), stat(col("cell")).as(name)): _*)
     if (sort) out.orderBy((keys :+ "col_x" :+ "col_y").map(col): _*) else out
   }
 
@@ -192,18 +197,8 @@ final class WeightedGroupBy private[core] (
       covNarrow(ddof)
     else covMelted(ddof)
 
-  private[graft] def covNarrow(ddof: Int = 1): DataFrame = {
-    requireKeysFree(Seq("cells", "cell", "col_x", "col_y", "cov"))
-    val cols = numericAggCols
-    val cells = for { x <- cols; y <- cols } yield
-      struct(lit(x).as("col_x"), lit(y).as("col_y"),
-        WeightedMoments.covExpr(nc(x), nc(y), w, ddof).as("cov"))
-    val agged = base.groupBy(keys.map(col): _*).agg(array(cells: _*).as("cells"))
-    val out = agged
-      .select(keys.map(col) :+ explode(col("cells")).as("cell"): _*)
-      .select(keys.map(col) ++ Seq(col("cell.col_x"), col("cell.col_y"), col("cell.cov")): _*)
-    if (sort) out.orderBy((keys :+ "col_x" :+ "col_y").map(col): _*) else out
-  }
+  private[graft] def covNarrow(ddof: Int = 1): DataFrame =
+    narrowCells("cov", PairMoments.cov(_, ddof))
 
   /** Wide-frame grouped covariance: melt → double explode → one 4-moment
     * hash aggregate keyed on (group keys, col_x, col_y) — O(k) planning,

@@ -175,19 +175,10 @@ object WeightedMoments {
   def rowStdExpr(cs: Seq[Column], w: Column, ddof: Int = 1, skipna: Boolean = true): Column =
     sqrt(rowVarExpr(cs, w, ddof, skipna))
 
-  /** Weighted covariance of a pair under the joint-validity mask — the
-    * `cov` piece of `_stats.py:62-66` exposed standalone (the reference
-    * README lists covariance as future work; same guards as corr). */
-  def covExpr(x: Column, y: Column, w: Column, ddof: Int = 1): Column = {
-    val valid = x.isNotNull && y.isNotNull && w.isNotNull
-    def m(e: Column): Column = sum(when(valid, e).otherwise(nullD))
-    val sw  = coalesce(sum(when(valid, w).otherwise(lit(0.0))), lit(0.0))
-    covFromMoments(sw, m(x * w), m(y * w), m(x * y * w), ddof)
-  }
-
-  /** Final covariance from the 4 joint-validity moments — shared by the
-    * per-pair aggregate path ([[covExpr]]) and the melted wide-frame path,
-    * mirroring [[corrFromMoments]]. */
+  /** Final weighted covariance from the 4 joint-validity moments — the
+    * `cov` piece of `_stats.py:62-66` (the reference README lists
+    * covariance as future work; same guards as corr). Shared by the narrow
+    * [[PairMoments]] path and the melted wide-frame paths of `cov`. */
   def covFromMoments(sw: Column, sx: Column, sy: Column, sxy: Column, ddof: Int): Column =
     when(sw <= lit(ddof.toDouble) || isnan(sw), nullD)
       .otherwise(safeDiv(sxy - safeDiv(sx * sy, sw), sw - lit(ddof.toDouble)))
@@ -211,10 +202,9 @@ object WeightedMoments {
   }
 
   /** Final correlation from the 7 joint-validity moments, with every
-    * `_stats.py:36-73` guard — shared by the per-pair aggregate path
-    * ([[corrExpr]]) and the melted wide-frame path
-    * ([[graft.core.WeightedDataFrame.corr]]), so the two plans cannot
-    * drift numerically. */
+    * `_stats.py:36-73` guard — shared by the aligned-series aggregate
+    * ([[corrExpr]]), the narrow [[PairMoments]] path and the melted
+    * wide-frame paths of `corr`, so no two plans can drift numerically. */
   def corrFromMoments(
       n: Column, sw: Column, sx: Column, sy: Column,
       sxy: Column, sxx: Column, syy: Column,
