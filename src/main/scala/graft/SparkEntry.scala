@@ -16,8 +16,12 @@ import graft.ops.{Dedup, Similarity, TextAnalysis}
   */
 object SparkEntry {
 
+  /** A test table through [[graft.sources.Tables.testTable]]: its schema
+    * is resolved once per file listing and passed to every later read, so
+    * a repeat call runs no schema-inference job; a rewritten table is read
+    * fresh. */
   private def table(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    graft.sources.Tables.testTable(s, dir, name)
 
   /** [[graft.sources.Tables.fanOutForCompute]] over a test table — applied
     * per query, ONLY where a measured A/B showed the downstream per-row

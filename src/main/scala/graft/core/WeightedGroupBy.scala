@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Weighted groupby driver — `/root/reference/src/pandas_weights/frame.py:449-679`.
   *
@@ -109,17 +110,23 @@ final class WeightedGroupBy private[core] (
     narrowCells("corr", PairMoments.corr(_, ddof, minPeriods))
 
   /** The grouped narrow long format: per group, the [[PairMoments]] cells
-    * of the numeric columns, exploded and projected through `stat`. */
+    * of the numeric columns, exploded and projected through `stat`.
+    *
+    * The columns go to [[PairMoments]] in Spark's string order (UTF-8
+    * bytes), so each group's x-major cells already come out ordered by
+    * `(col_x, col_y)`. `sort` then range-sorts the per-group aggregate rows
+    * by key, before `explode`: the same row order as sorting the cells by
+    * `(keys, col_x, col_y)`, on k² times fewer rows. */
   private def narrowCells(name: String, stat: Column => Column): DataFrame = {
     requireKeysFree(Seq("cells", "cell", "col_x", "col_y", name))
-    val cols = numericAggCols
+    val cols = numericAggCols.sortBy(UTF8String.fromString)
     val names = typedlit(cols)
-    val out = base.groupBy(keys.map(col): _*)
+    val groups = base.groupBy(keys.map(col): _*)
       .agg(PairMoments.column(cols.map(nc), w).as("cells"))
+    (if (sort) groups.orderBy(keys.map(col): _*) else groups)
       .select(keys.map(col) :+ explode(col("cells")).as("cell"): _*)
       .select(keys.map(col) ++ Seq(names(col("cell.i")).as("col_x"),
         names(col("cell.j")).as("col_y"), stat(col("cell")).as(name)): _*)
-    if (sort) out.orderBy((keys :+ "col_x" :+ "col_y").map(col): _*) else out
   }
 
   /** Wide-frame grouped corr: melt → double explode → one 7-moment hash

@@ -14,14 +14,10 @@ package graft.ops
   * (thread interleaving changes only job timing, never any frame's
   * content), and Spark job submission is thread-safe. Spark's job
   * description/group live in an InheritableThreadLocal, so the caller's
-  * labels carry into the worker threads.
-  *
-  * `SPARK_GRAFT_NO_OVERLAP` degrades to strictly serial execution — the
-  * A/B attribution switch (same convention as `SPARK_GRAFT_NO_FANOUT`). */
+  * labels carry into the worker threads. */
 private[graft] object Overlap {
   def inParallel[A](thunks: Seq[() => A]): Seq[A] = {
-    if (thunks.sizeIs <= 1 || sys.env.contains("SPARK_GRAFT_NO_OVERLAP"))
-      return thunks.map(_())
+    if (thunks.sizeIs <= 1) return thunks.map(_())
     val results = new Array[Option[A]](thunks.size)
     val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val threads = thunks.zipWithIndex.map { case (th, i) =>

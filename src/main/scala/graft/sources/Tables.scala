@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Source/sink helpers. The reference has no I/O layer of its own (pandas
   * constructors only — SURVEY §2.5); this is the engine's equivalent
@@ -10,53 +11,109 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  /** Read one of the driver's test tables. `events.ts` has shipped as
-    * parquet TIMESTAMP(MICROS) in some data generations and
-    * TIMESTAMP(NANOS) in others. MICROS reads natively; NANOS makes
-    * Spark's default schema converter THROW at relation resolution — and
-    * the converse trap is silent: an explicit ts-as-long schema happily
-    * reads a MICROS column's raw int64 and a blanket `div 1000` then
-    * corrupts every timestamp by 1000×. So detect by attempting the
-    * native read first, and only fall back to the explicit-schema
-    * nanos path (raw long nanos, normalized by integer division —
-    * double math would corrupt epochs above 2⁵³ ns) when the native
-    * schema conversion rejects the file. No legacy `nanosAsLong`
-    * session conf either way — no session state is mutated.
+  /** Read one of the test tables through [[read]]: the schema
+    * is resolved once per file listing, and a rewritten table is read
+    * fresh. `events.ts` has shipped as parquet TIMESTAMP(MICROS) in some
+    * data generations and TIMESTAMP(NANOS) in others. MICROS reads
+    * natively; NANOS makes Spark's default schema converter THROW at
+    * relation resolution — and the converse trap is silent: an explicit
+    * ts-as-long schema happily reads a MICROS column's raw int64 and a
+    * blanket `div 1000` then corrupts every timestamp by 1000×. So the
+    * native read is attempted first, and only when the native schema
+    * conversion rejects the file does the explicit-schema nanos read take
+    * over (raw long nanos, normalized by integer division — double math
+    * would corrupt epochs above 2⁵³ ns). That decision is part of the
+    * cached schema (ts as long), so it is made once per listing, not
+    * re-tried on every call. No legacy `nanosAsLong` session conf either
+    * way — no session state is mutated.
     */
-  def testTable(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") {
-      import org.apache.spark.sql.types._
-      val path = s"$dir/events.parquet"
-      def nanosFallback: DataFrame = {
-        val sch = StructType(Seq(
-          StructField("event_id", LongType), StructField("ts", LongType),
-          StructField("user_id", LongType), StructField("event_type", StringType),
-          StructField("value", DoubleType), StructField("props", StringType)))
-        spark.read.schema(sch).parquet(path)
-          .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      }
-      scala.util.Try(spark.read.parquet(path)) match {
-        case scala.util.Success(df) =>
-          df.schema("ts").dataType.typeName match {
-            // MICROS arrives as TIMESTAMP_NTZ (isAdjustedToUTC=false under
-            // inferTimestampNTZ) or TIMESTAMP; normalize to TIMESTAMP —
-            // under the pinned UTC session zone the cast is instant-exact
-            case "timestamp" | "timestamp_ntz" =>
-              df.withColumn("ts", col("ts").cast("timestamp"))
-            // the legacy nanosAsLong session conf surfaces NANOS as long
-            case "long" => nanosFallback
-            case t => throw new IllegalArgumentException(
-              s"events.ts has unexpected type $t — refusing to guess a conversion")
-          }
+  def testTable(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    if (name == "events") events(spark, path) else read(spark, path)
+  }
+
+  private def events(spark: SparkSession, path: String): DataFrame = {
+    val df = parquetOnce(spark, path) {
+      try spark.read.parquet(path)
+      catch {
         // ONLY the NANOS schema-conversion rejection falls back: any other
         // read failure (corrupt file, some OTHER unsupported column) must
         // surface, or a MICROS ts would be silently divided by 1000 again
-        case scala.util.Failure(e)
-            if Option(e.getMessage).exists(_.toUpperCase.contains("NANOS")) =>
-          nanosFallback
-        case scala.util.Failure(e) => throw e
+        case e: Exception if Option(e.getMessage).exists(_.toUpperCase.contains("NANOS")) =>
+          spark.read.schema(EventsNanos).parquet(path)
       }
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    }
+    df.schema("ts").dataType match {
+      // MICROS arrives as TIMESTAMP_NTZ (isAdjustedToUTC=false under
+      // inferTimestampNTZ) or TIMESTAMP; normalize to TIMESTAMP — under
+      // the pinned UTC session zone the cast is instant-exact
+      case TimestampType | TimestampNTZType => df.withColumn("ts", col("ts").cast("timestamp"))
+      // NANOS read as raw long (the fallback above, or the legacy
+      // nanosAsLong session conf)
+      case LongType => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case t => throw new IllegalArgumentException(
+        s"events.ts has unexpected type ${t.typeName} — refusing to guess a conversion")
+    }
+  }
+
+  /** `events` with `ts` as the raw int64 of a TIMESTAMP(NANOS) column. */
+  private val EventsNanos = StructType(Seq(
+    StructField("event_id", LongType), StructField("ts", LongType),
+    StructField("user_id", LongType), StructField("event_type", StringType),
+    StructField("value", DoubleType), StructField("props", StringType)))
+
+  /** A parquet path's resolved schema and the stamp it was resolved under:
+    * a SHA-256 of the sorted (name, length, modification time) of every
+    * leaf file, so an entry does not grow with the file count, plus the
+    * session's parquet confs (`inferTimestampNTZ` and friends change the
+    * inferred types). */
+  private final case class Resolved(stamp: Stamp, schema: StructType)
+  private type Stamp = (Seq[Byte], Map[String, String])
+
+  /** One entry per (session, path), replaced on a new stamp. Sessions are
+    * held weakly, so a dropped session drops its entries; a session made
+    * by `newSession()` is its own key. Guarded by its own monitor:
+    * `Overlap` reads from several threads. */
+  private val resolved =
+    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, Resolved]]()
+
+  /** Read `path` with the schema resolved under the current stamp, else
+    * run `infer` and remember its schema. Schema inference of a parquet
+    * read runs a footer-reading Spark job; a read with an explicit schema
+    * runs none. The stamp comes from the file index Spark builds for the
+    * read itself, so there is no second listing. */
+  private def parquetOnce(spark: SparkSession, path: String)(infer: => DataFrame): DataFrame = {
+    val known = resolved.synchronized(Option(resolved.get(spark)).flatMap(_.get(path)))
+    val current = known.flatMap { r =>
+      val df = spark.read.schema(r.schema).parquet(path)
+      if (stampOf(df).contains(r.stamp)) Some(df) else None
+    }
+    current.getOrElse {
+      val df = infer
+      stampOf(df).foreach { st =>
+        resolved.synchronized {
+          resolved.computeIfAbsent(spark, _ => scala.collection.mutable.Map.empty)
+            .update(path, Resolved(st, df.schema))
+        }
+      }
+      df
+    }
+  }
+
+  /** The stamp of a file-source read, or None when the plan has no file
+    * index to take it from (then the read is never cached). */
+  private def stampOf(df: DataFrame): Option[Stamp] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }.collect {
+      case fs: HadoopFsRelation =>
+        val files = java.security.MessageDigest.getInstance("SHA-256")
+        fs.location.listFiles(Nil, Nil).flatMap(_.files)
+          .map(f => s"${f.getPath}\u0000${f.fileStatus.getLen}\u0000${f.fileStatus.getModificationTime}\n")
+          .sorted.foreach(line => files.update(line.getBytes("UTF-8")))
+        val confs = df.sparkSession.conf.getAll.filter(_._1.contains(".parquet."))
+        (files.digest().toSeq, confs)
+    }
+  }
 
   /** Fan a narrow input out to the session's default parallelism before a
     * compute-heavy per-row stage (fixture encode, codec decode, shingling,
@@ -78,19 +135,21 @@ object Tables {
     * Keyless calls fall back to round-robin (inputs here are deterministic
     * file scans, where round-robin is retry-safe). */
   def fanOutForCompute(df: DataFrame, keys: Column*): DataFrame = {
-    if (sys.env.contains("SPARK_GRAFT_NO_FANOUT")) return df // A/B attribution switch
-    val target = sys.env.get("SPARK_GRAFT_FANOUT_TARGET").map(_.toInt)
-      .getOrElse(df.sparkSession.sparkContext.defaultParallelism)
+    val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions >= target) df
     else if (keys.isEmpty) df.repartition(target)
     else df.repartition(target, keys: _*)
   }
 
   /** Generic format read (parquet/orc/json/csv); csv/json get schema
-    * inference + header handling. Filters/projections compose lazily on the
+    * inference + header handling. A parquet path's schema is resolved once
+    * per file listing (one footer-reading job), and later reads of the
+    * same session pass it explicitly (no job); a rewritten table has a new
+    * listing and is read fresh. Filters/projections compose lazily on the
     * result and push into the scan where the format supports it. */
   def read(spark: SparkSession, path: String, format: String = "parquet"): DataFrame =
     format match {
+      case "parquet" => parquetOnce(spark, path)(spark.read.parquet(path))
       case "csv"  => spark.read.option("header", "true").option("inferSchema", "true").csv(path)
       case "json" => spark.read.json(path)
       case f      => spark.read.format(f).load(path)

@@ -209,4 +209,37 @@ class PairMomentsSpec extends SparkSpecBase {
       }
     }
   }
+
+  test("sorted grouped corr/cov: (keys, col_x, col_y) order from sorting the per-group rows") {
+    // frame order differs from name order, and Spark orders strings by
+    // UTF-8 bytes: "ｚ" (U+FF5A) sorts before "😀" (U+1F600) there, after
+    // it in Java's UTF-16 order
+    val cols = Seq("b", "😀", "ｚ", "C", "a")
+    val schema = StructType(StructField("g", StringType) +:
+      (cols :+ "w").map(StructField(_, DoubleType)))
+    val keys = Seq("b", "a", null, "b", "a", null, "c", "b")
+    val rows = keys.zipWithIndex.map { case (g, r) =>
+      Row.fromSeq(g +: (cols.indices.map(i => ((r + 2) * (i + 5) % 11).toDouble) :+ 1.0 + r % 3))
+    }
+    // 8 input partitions and 4 shuffle partitions for 4 groups
+    val wdf = WeightedDataFrame.wt(
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 8), schema), "w")
+    val sorted = wdf.groupBy(Seq("g"), dropna = false)
+    val unsorted = wdf.groupBy(Seq("g"), dropna = false, sort = false)
+    def listed(df: DataFrame): Seq[(Seq[Any], Option[Double])] =
+      df.collect().toSeq.map(r => r.toSeq.init -> cell(r, 3))
+    for ((what, got, ref) <- Seq(("corr", sorted.corr(), unsorted.corr()),
+        ("cov", sorted.cov(), unsorted.cov()))) {
+      val want = listed(ref.orderBy("g", "col_x", "col_y"))
+      assert(want.size == 4 * cols.size * cols.size && want.head._1.head == null, what)
+      assert(listed(got) == want, what)
+      // one range-partitioned sort, on the keys alone: the per-group rows,
+      // not the k² times larger exploded cells
+      val sorts = got.queryExecution.optimizedPlan.collect {
+        case s: org.apache.spark.sql.catalyst.plans.logical.Sort => s
+      }
+      assert(sorts.size == 1 && sorts.head.global, what)
+      assert(sorts.head.order.flatMap(_.references.map(_.name)) == Seq("g"), what)
+    }
+  }
 }

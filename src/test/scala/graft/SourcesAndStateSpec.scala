@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.core.WeightedDataFrame
 import graft.sources.Tables
@@ -35,6 +36,128 @@ class SourcesSpec extends SparkSpecBase {
       Tables.testTable(spark, dir, "events").count()
     }
     assert(e.getMessage.contains("unexpected type"))
+  }
+
+  /** Spark jobs submitted by `body` from this thread (counted through the
+    * job group, so jobs of other threads never count). */
+  private def jobsOf[A](session: org.apache.spark.sql.SparkSession)(body: => A): (A, Seq[String]) = {
+    val sc = session.sparkContext
+    val group = s"graft-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.add(s"job ${e.jobId}: ${e.stageInfos.map(_.details).mkString(" | ")}"): Unit
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "graft test")
+    try {
+      val out = body
+      org.apache.spark.TestListenerBus.drain(sc)
+      (out, jobs.toArray(Array.empty[String]).toSeq)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** `df` as ONE parquet file at `path` (the test tables' layout), via a
+    * single-partition Spark write whose one part file is moved into place. */
+  private def writeSingleFile(df: org.apache.spark.sql.DataFrame, path: String): Unit = {
+    val out = tempDir("graft-single")
+    df.coalesce(1).write.mode("overwrite").parquet(out)
+    val part = new java.io.File(out).listFiles().filter(f =>
+      f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+    java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(path),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** The two table layouts a reader meets: one file (the test tables)
+    * and a Spark-written directory of part files. */
+  private val layouts: Seq[(String, (org.apache.spark.sql.DataFrame, String) => Unit)] = Seq(
+    "single file" -> (writeSingleFile _),
+    "spark directory" -> ((df, path) => df.write.mode("overwrite").parquet(path)))
+
+  test("reader: a table rewritten with an added column is read fresh") {
+    import spark.implicits._
+    for ((layout, write) <- layouts) {
+      val dir = tempDir("graft-rewrite")
+      write(Seq((1L, 2.0)).toDF("a", "b"), s"$dir/t.parquet")
+      assert(Tables.testTable(spark, dir, "t").columns.toSeq == Seq("a", "b"), layout)
+      write(Seq((3L, 4.0, "x")).toDF("a", "b", "c"), s"$dir/t.parquet")
+      val again = Tables.testTable(spark, dir, "t")
+      assert(again.columns.toSeq == Seq("a", "b", "c"), layout)
+      assert(again.collect().toSeq == Seq(Row(3L, 4.0, "x")), layout)
+    }
+  }
+
+  test("reader: a repeat read of an unchanged table submits no Spark job") {
+    import spark.implicits._
+    for ((layout, write) <- layouts) {
+      val dir = tempDir("graft-repeat")
+      write(Seq((1L, 2.0), (2L, 3.0)).toDF("a", "b"), s"$dir/t.parquet")
+      // the first read infers (a footer-reading job); this also shows the
+      // counter sees the reader's jobs at all
+      val (_, first) = jobsOf(spark)(Tables.read(spark, s"$dir/t.parquet"))
+      assert(first.nonEmpty, s"$layout: first read ran no inference job")
+      val (df, repeat) = jobsOf(spark)(Tables.read(spark, s"$dir/t.parquet"))
+      assert(repeat.isEmpty, s"$layout: repeat read ran jobs:\n${repeat.mkString("\n")}")
+      assert(df.schema.map(f => f.name -> f.dataType) == Seq("a" -> LongType, "b" -> DoubleType))
+      assert(df.count() == 2)
+    }
+  }
+
+  /** A fresh copy of a resource fixture's `events.parquet`; returns its dir. */
+  private def fixtureCopy(resource: String): String = {
+    val dir = tempDir("graft-events")
+    java.nio.file.Files.copy(getClass.getResourceAsStream(s"/$resource/events.parquet"),
+      java.nio.file.Paths.get(s"$dir/events.parquet"))
+    dir
+  }
+
+  test("reader: a newSession() infers its own schema; parquet confs are part of the stamp") {
+    // written outside Spark, so the footer carries no Spark schema and the
+    // inferred ts type follows the session's inferTimestampNTZ conf
+    val path = s"${fixtureCopy("events_micros")}/events.parquet"
+    assert(Tables.read(spark, path).schema("ts").dataType == TimestampNTZType)
+    val other = spark.newSession()
+    val (df, jobs) = jobsOf(other)(Tables.read(other, path))
+    assert(jobs.nonEmpty, "a new session reused another session's schema")
+    assert(df.sparkSession eq other)
+    other.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    assert(Tables.read(other, path).schema("ts").dataType == TimestampType)
+    assert(Tables.read(spark, path).schema("ts").dataType == TimestampNTZType)
+  }
+
+  /** `events` read from a fresh copy of a resource fixture, first and
+    * cached read: (event_id, epoch micros of ts) per row. */
+  private def eventsMicros(resource: String): Seq[Seq[(Long, Long)]] = {
+    val dir = fixtureCopy(resource)
+    def micros(e: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] = {
+      assert(e.schema("ts").dataType == TimestampType)
+      e.select(col("event_id"), unix_micros(col("ts"))).orderBy("event_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    }
+    val first = micros(Tables.testTable(spark, dir, "events"))
+    val (cached, jobs) = jobsOf(spark)(Tables.testTable(spark, dir, "events"))
+    assert(jobs.isEmpty, s"cached events read ran jobs:\n${jobs.mkString("\n")}")
+    Seq(first, micros(cached))
+  }
+
+  /** Both fixtures' epochs in microseconds (`tools/events_fixtures.py`). */
+  private val fixtureMicros = Seq(1L -> 1704067200123456L, 2L -> 1704067200123456L,
+    3L -> 1735689599999999L, 4L -> 86400000000L)
+
+  test("events.ts TIMESTAMP(NANOS): integer ns→µs on the first and the cached read") {
+    // row 2 is ...456999 ns: double division would round it up to ...457 µs
+    eventsMicros("events_nanos").foreach(got => assert(got == fixtureMicros))
+  }
+
+  test("events.ts TIMESTAMP(MICROS) is never divided by 1000") {
+    eventsMicros("events_micros").foreach(got => assert(got == fixtureMicros))
   }
 
   test("writeShards: deterministic membership, one file per shard, sorted within") {
