@@ -1779,8 +1779,8 @@ object SparkEntry {
     // recall of every approximate ANN path vs its brute truth, emitted as
     // above-floor booleans the oracle pins to all-true (plus per-row
     // non-vacuousness sentinels proving the truth sets weren't empty).
-    // Floors are conservative lower bounds re-measured via
-    // tools/RecallProbe (r10: lsh_top1 pair-recall 0.85 @ 500 vecs /
+    // Floors are conservative lower bounds, measured in round 10
+    // (lsh_top1 pair-recall 0.85 @ 500 vecs /
     // 0.51 @ 2000; probed LSH ≥ 0.86; IVF exact at verify SFs by the q32
     // degeneracy) — a silent recall regression past a floor flips a
     // boolean and the driver's hash check goes red.

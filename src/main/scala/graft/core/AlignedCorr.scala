@@ -45,6 +45,10 @@ object AlignedCorr {
     * no aligned partner still appears with corr NaN (`test_series.py:246-266`)
     * — unmatched rows get NULL `rightVal`, fail the validity mask, and the
     * guard yields NULL for the group.
+    *
+    * Rows come sorted by the keys through [[WeightedGroupBy.sortedByKeys]],
+    * bounded by the left frame's size: one partition when it is small, a
+    * global range sort otherwise.
     */
   def corrByGroup(
       left: WeightedDataFrame,
@@ -62,10 +66,11 @@ object AlignedCorr {
     val r = right.select((on :+ rightVal).map(c =>
       WeightedDataFrame.numericCol(right, c).as(c)): _*)
     val j = l.join(r, on, "left")
-    j.groupBy(keys.map(col): _*)
+    // bounded by `l`, not by the join: Spark estimates a join as the
+    // product of its sides, and the result has at most one row per `l` row
+    WeightedGroupBy.sortedByKeys(l, j.groupBy(keys.map(col): _*)
       .agg(WeightedMoments.corrExpr(
         WeightedDataFrame.numericCol(left.df, leftVal), col(rightVal), col(left.weightName),
-        ddof, minPeriods).as("corr"))
-      .orderBy(keys.map(col): _*)
+        ddof, minPeriods).as("corr")), keys.map(col))
   }
 }

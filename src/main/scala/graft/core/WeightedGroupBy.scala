@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Weighted groupby driver — `/root/reference/src/pandas_weights/frame.py:449-679`.
@@ -12,7 +13,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * independent grouped passes, `frame.py:601-609` — Catalyst fuses ours).
   *
   * `dropna=true` drops null-key rows and `sort=true` orders the result by the
-  * keys, matching the pandas groupby defaults (`frame.py:134-159`).
+  * keys, matching the pandas groupby defaults (`frame.py:134-159`). The
+  * order comes from [[WeightedGroupBy.sortedByKeys]]: a small input's
+  * result is sorted inside one partition, a large one's by a global range
+  * sort.
   */
 final class WeightedGroupBy private[core] (
     wdf: WeightedDataFrame,
@@ -36,12 +40,20 @@ final class WeightedGroupBy private[core] (
     if (dropna) df.where(keys.map(col(_).isNotNull).reduce(_ && _)) else df
   }
 
+  /** `out` in key order when `sort` is set, through
+    * [[WeightedGroupBy.sortedByKeys]] bounded by [[base]]. */
+  private def sorted(out: DataFrame, by: Seq[String] = keys, cellsPerRow: Long = 1): DataFrame =
+    if (sort) WeightedGroupBy.sortedByKeys(base, out, by.map(col), cellsPerRow) else out
+
+  /** Cells per group of the long-format corr/cov: k² over the numeric
+    * columns. */
+  private def pairCells: Long = numericAggCols.size.toLong * numericAggCols.size
+
   private def run(cols: Seq[String], expr: String => Column): DataFrame = {
     require(cols.nonEmpty,
       s"no aggregable columns: every value column is a group key or non-numeric (keys=$keys)")
-    val out = base.groupBy(keys.map(col): _*).agg(expr(cols.head).as(cols.head),
-      cols.tail.map(c => expr(c).as(c)): _*)
-    if (sort) out.orderBy(keys.map(col): _*) else out
+    sorted(base.groupBy(keys.map(col): _*).agg(expr(cols.head).as(cols.head),
+      cols.tail.map(c => expr(c).as(c)): _*))
   }
 
   /** Per-group weighted count, all non-key columns — `frame.py:512-528`. */
@@ -84,10 +96,9 @@ final class WeightedGroupBy private[core] (
     val vw = base.where(col(valueCol).isNotNull && w.isNotNull)
       .groupBy(kcols :+ col(valueCol).as("__v__"): _*)
       .agg(fSum(w).as("__vw__"))
-    val out = vw.groupBy(kcols: _*)
+    sorted(vw.groupBy(kcols: _*)
       .agg(fMin(struct((-col("__vw__")).as("__nw__"), col("__v__").as("__v__"))).as("__s__"))
-      .select(kcols :+ col("__s__.__v__").as(valueCol): _*)
-    if (sort) out.orderBy(kcols: _*) else out
+      .select(kcols :+ col("__s__.__v__").as(valueCol): _*))
   }
 
   /** Per-group pairwise weighted Pearson, long format
@@ -114,16 +125,18 @@ final class WeightedGroupBy private[core] (
     *
     * The columns go to [[PairMoments]] in Spark's string order (UTF-8
     * bytes), so each group's x-major cells already come out ordered by
-    * `(col_x, col_y)`. `sort` then range-sorts the per-group aggregate rows
-    * by key, before `explode`: the same row order as sorting the cells by
-    * `(keys, col_x, col_y)`, on k² times fewer rows. */
+    * `(col_x, col_y)`. `sort` then sorts the per-group aggregate rows by
+    * key, before `explode`: the same row order as sorting the cells by
+    * `(keys, col_x, col_y)`, on k² times fewer rows. Each of those rows
+    * carries k² cells, so the one-partition bound of
+    * [[WeightedGroupBy.sortedByKeys]] is the input estimate times k². */
   private def narrowCells(name: String, stat: Column => Column): DataFrame = {
     requireKeysFree(Seq("cells", "cell", "col_x", "col_y", name))
     val cols = numericAggCols.sortBy(UTF8String.fromString)
     val names = typedlit(cols)
     val groups = base.groupBy(keys.map(col): _*)
       .agg(PairMoments.column(cols.map(nc), w).as("cells"))
-    (if (sort) groups.orderBy(keys.map(col): _*) else groups)
+    sorted(groups, cellsPerRow = pairCells)
       .select(keys.map(col) :+ explode(col("cells")).as("cell"): _*)
       .select(keys.map(col) ++ Seq(names(col("cell.i")).as("col_x"),
         names(col("cell.j")).as("col_y"), stat(col("cell")).as(name)): _*)
@@ -192,7 +205,7 @@ final class WeightedGroupBy private[core] (
           col("__n__"), col("__sw__"), col("__sx__"), col("__sy__"),
           col("__sxy__"), col("__sxx__"), col("__syy__"),
           ddof, minPeriods).as("corr")): _*)
-    if (sort) out.orderBy((keys :+ "col_x" :+ "col_y").map(col): _*) else out
+    sorted(out, keys :+ "col_x" :+ "col_y", pairCells)
   }
 
   /** Per-group pairwise weighted covariance, long format
@@ -229,7 +242,7 @@ final class WeightedGroupBy private[core] (
         WeightedMoments.covFromMoments(
           col("__sw__"), col("__sx__"), col("__sy__"), col("__sxy__"),
           ddof).as("cov")): _*)
-    if (sort) out.orderBy((keys :+ "col_x" :+ "col_y").map(col): _*) else out
+    sorted(out, keys :+ "col_x" :+ "col_y", pairCells)
   }
 
   /** Project to a sub-groupby (weights retained) — `frame.py:468-477`. */
@@ -237,10 +250,7 @@ final class WeightedGroupBy private[core] (
     new WeightedGroupBy(wdf.select((keys ++ cols).distinct: _*), keys, dropna, sort)
 
   /** Distinct group keys — `frame.py:479-482`. */
-  def groupKeys(): DataFrame = {
-    val out = base.select(keys.map(col): _*).distinct()
-    if (sort) out.orderBy(keys.map(col): _*) else out
-  }
+  def groupKeys(): DataFrame = sorted(base.select(keys.map(col): _*).distinct())
 
   /** Apply an aggregate-expression builder to each weighted numeric column
     * per group — `frame.py:662-679` (the function sees pre-weighted data).
@@ -386,11 +396,10 @@ final class WeightedGroupBy private[core] (
       .groupBy(kcols :+ col("__qi__"): _*)
       .agg(fMin(col("__v__")).as("__qv__"))
     // pivot the quantile index back to one column per q
-    val out = resolved.groupBy(kcols: _*).agg(
+    sorted(resolved.groupBy(kcols: _*).agg(
       fMin(when(col("__qi__") === 0, col("__qv__"))).as(qNames.head),
       qs.indices.tail.map(i =>
-        fMin(when(col("__qi__") === i, col("__qv__"))).as(qNames(i))): _*)
-    if (sort) out.orderBy(kcols: _*) else out
+        fMin(when(col("__qi__") === i, col("__qv__"))).as(qNames(i))): _*))
   }
 
   /** Distributed arbitrary-function-per-group escape hatch — the scale path
@@ -426,5 +435,33 @@ final class WeightedGroupBy private[core] (
       val cond = kvs.map { case (k, v) => col(k) <=> lit(v) }.reduce(_ && _)
       (kvs.map(_._2), new WeightedDataFrame(wdf.df.where(cond), wdf.weightName))
     }
+  }
+}
+
+object WeightedGroupBy {
+
+  /** `out` ordered by `keys`: the one place that decides how a keyed
+    * result is ordered. `out` must hold at most `cellsPerRow` rows per row
+    * of `input`, as a grouped result does.
+    *
+    * When Spark's size estimate of `input` (from the analyzed plan, no job)
+    * times `cellsPerRow` is at most `spark.sql.adaptive.advisoryPartitionSizeInBytes`,
+    * the result is sorted inside one partition. AQE already reads the
+    * aggregate shuffle of an input that small as one partition, so this
+    * costs no parallelism, and it drops the global sort's range-partition
+    * sampling job and its extra shuffle: a grouped call runs 2 jobs, not 4.
+    * A larger input, or one of unknown size (estimated at
+    * `spark.sql.defaultSizeInBytes`, as for an RDD), keeps the global range
+    * sort, so no result of unbounded size is sorted in one partition. */
+  private[core] def sortedByKeys(
+      input: DataFrame,
+      out: DataFrame,
+      keys: Seq[Column],
+      cellsPerRow: Long = 1): DataFrame = {
+    val estimate = input.queryExecution.analyzed.stats.sizeInBytes * cellsPerRow
+    val onePartition =
+      input.sparkSession.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    if (estimate <= onePartition) out.coalesce(1).sortWithinPartitions(keys: _*)
+    else out.orderBy(keys: _*)
   }
 }

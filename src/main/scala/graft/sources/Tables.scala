@@ -19,13 +19,14 @@ object Tables {
     * relation resolution — and the converse trap is silent: an explicit
     * ts-as-long schema happily reads a MICROS column's raw int64 and a
     * blanket `div 1000` then corrupts every timestamp by 1000×. So the
-    * native read is attempted first, and only when the native schema
-    * conversion rejects the file does the explicit-schema nanos read take
-    * over (raw long nanos, normalized by integer division — double math
-    * would corrupt epochs above 2⁵³ ns). That decision is part of the
-    * cached schema (ts as long), so it is made once per listing, not
-    * re-tried on every call. No legacy `nanosAsLong` session conf either
-    * way — no session state is mutated.
+    * driver reads one leaf file's parquet footer first: only a `ts`
+    * annotated TIMESTAMP(NANOS) takes the explicit-schema nanos read (raw
+    * long nanos, normalized by integer division — double math would
+    * corrupt epochs above 2⁵³ ns); anything else takes the native read,
+    * whose failures surface. No Spark job is submitted just to fail on the
+    * NANOS column. That decision is part of the cached schema (ts as long),
+    * so it is made once per listing, not re-tried on every call. No legacy
+    * `nanosAsLong` session conf either way — no session state is mutated.
     */
   def testTable(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
@@ -34,25 +35,42 @@ object Tables {
 
   private def events(spark: SparkSession, path: String): DataFrame = {
     val df = parquetOnce(spark, path) {
-      try spark.read.parquet(path)
-      catch {
-        // ONLY the NANOS schema-conversion rejection falls back: any other
-        // read failure (corrupt file, some OTHER unsupported column) must
-        // surface, or a MICROS ts would be silently divided by 1000 again
-        case e: Exception if Option(e.getMessage).exists(_.toUpperCase.contains("NANOS")) =>
-          spark.read.schema(EventsNanos).parquet(path)
-      }
+      // an explicit schema lists the files and reads no footer
+      val asNanos = spark.read.schema(EventsNanos).parquet(path)
+      if (tsIsNanos(asNanos)) asNanos else spark.read.parquet(path)
     }
     df.schema("ts").dataType match {
       // MICROS arrives as TIMESTAMP_NTZ (isAdjustedToUTC=false under
       // inferTimestampNTZ) or TIMESTAMP; normalize to TIMESTAMP — under
       // the pinned UTC session zone the cast is instant-exact
       case TimestampType | TimestampNTZType => df.withColumn("ts", col("ts").cast("timestamp"))
-      // NANOS read as raw long (the fallback above, or the legacy
+      // NANOS read as raw long (the explicit schema above, or the legacy
       // nanosAsLong session conf)
       case LongType => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case t => throw new IllegalArgumentException(
         s"events.ts has unexpected type ${t.typeName} — refusing to guess a conversion")
+    }
+  }
+
+  /** Whether the footer of the first data file of `read` annotates `ts` as
+    * TIMESTAMP(NANOS). Read on the driver: one footer, no Spark job. A
+    * read with no data file, or a file without `ts`, is left to the native
+    * read to report. */
+  private def tsIsNanos(read: DataFrame): Boolean = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+    leafFiles(read).flatMap(_.map(_.getPath).find(p => !p.getName.startsWith("_"))).exists { p =>
+      val footer = ParquetFileReader.open(
+        HadoopInputFile.fromPath(p, read.sparkSession.sessionState.newHadoopConf()))
+      try {
+        val schema = footer.getFooter.getFileMetaData.getSchema
+        schema.containsField("ts") &&
+          (schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+            case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+            case _ => false
+          })
+      } finally footer.close()
     }
   }
 
@@ -100,20 +118,26 @@ object Tables {
     }
   }
 
-  /** The stamp of a file-source read, or None when the plan has no file
-    * index to take it from (then the read is never cached). */
-  private def stampOf(df: DataFrame): Option[Stamp] = {
+  /** The leaf files of a file-source read, from the file index Spark built
+    * for it (no second listing), or None when the plan has no file index. */
+  private def leafFiles(df: DataFrame) = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }.collect {
-      case fs: HadoopFsRelation =>
-        val files = java.security.MessageDigest.getInstance("SHA-256")
-        fs.location.listFiles(Nil, Nil).flatMap(_.files)
-          .map(f => s"${f.getPath}\u0000${f.fileStatus.getLen}\u0000${f.fileStatus.getModificationTime}\n")
-          .sorted.foreach(line => files.update(line.getBytes("UTF-8")))
-        val confs = df.sparkSession.conf.getAll.filter(_._1.contains(".parquet."))
-        (files.digest().toSeq, confs)
+      case fs: HadoopFsRelation => fs.location.listFiles(Nil, Nil).flatMap(_.files)
     }
   }
+
+  /** The stamp of a file-source read, or None when the plan has no file
+    * index to take it from (then the read is never cached). */
+  private def stampOf(df: DataFrame): Option[Stamp] =
+    leafFiles(df).map { leaves =>
+      val files = java.security.MessageDigest.getInstance("SHA-256")
+      leaves
+        .map(f => s"${f.getPath}\u0000${f.fileStatus.getLen}\u0000${f.fileStatus.getModificationTime}\n")
+        .sorted.foreach(line => files.update(line.getBytes("UTF-8")))
+      val confs = df.sparkSession.conf.getAll.filter(_._1.contains(".parquet."))
+      (files.digest().toSeq, confs)
+    }
 
   /** Fan a narrow input out to the session's default parallelism before a
     * compute-heavy per-row stage (fixture encode, codec decode, shingling,

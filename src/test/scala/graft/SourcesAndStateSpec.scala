@@ -41,20 +41,33 @@ class SourcesSpec extends SparkSpecBase {
   /** Spark jobs submitted by `body` from this thread (counted through the
     * job group, so jobs of other threads never count). */
   private def jobsOf[A](session: org.apache.spark.sql.SparkSession)(body: => A): (A, Seq[String]) = {
+    val (out, jobs, _) = jobRecord(session)(body)
+    (out, jobs)
+  }
+
+  /** [[jobsOf]], plus the ids of those jobs that ended in failure. */
+  private def jobRecord[A](session: org.apache.spark.sql.SparkSession)(
+      body: => A): (A, Seq[String], Seq[Int]) = {
+    import org.apache.spark.scheduler.{JobSucceeded, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
     val sc = session.sparkContext
     val group = s"graft-jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val failed = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.add(s"job ${e.jobId}: ${e.stageInfos.map(_.details).mkString(" | ")}"): Unit
+          jobs.put(e.jobId, s"job ${e.jobId}: ${e.stageInfos.map(_.details).mkString(" | ")}"): Unit
+      // the bus delivers a job's start before its end
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (jobs.containsKey(e.jobId) && e.jobResult != JobSucceeded) failed.add(e.jobId): Unit
     }
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "graft test")
     try {
       val out = body
       org.apache.spark.TestListenerBus.drain(sc)
-      (out, jobs.toArray(Array.empty[String]).toSeq)
+      import scala.jdk.CollectionConverters._
+      (out, jobs.asScala.toSeq.sortBy(_._1).map(_._2), failed.asScala.toSeq)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
@@ -132,15 +145,17 @@ class SourcesSpec extends SparkSpecBase {
     assert(Tables.read(spark, path).schema("ts").dataType == TimestampNTZType)
   }
 
+  /** (event_id, epoch micros of ts) per row of an `events` read. */
+  private def micros(e: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] = {
+    assert(e.schema("ts").dataType == TimestampType)
+    e.select(col("event_id"), unix_micros(col("ts"))).orderBy("event_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+  }
+
   /** `events` read from a fresh copy of a resource fixture, first and
     * cached read: (event_id, epoch micros of ts) per row. */
   private def eventsMicros(resource: String): Seq[Seq[(Long, Long)]] = {
     val dir = fixtureCopy(resource)
-    def micros(e: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] = {
-      assert(e.schema("ts").dataType == TimestampType)
-      e.select(col("event_id"), unix_micros(col("ts"))).orderBy("event_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    }
     val first = micros(Tables.testTable(spark, dir, "events"))
     val (cached, jobs) = jobsOf(spark)(Tables.testTable(spark, dir, "events"))
     assert(jobs.isEmpty, s"cached events read ran jobs:\n${jobs.mkString("\n")}")
@@ -154,6 +169,14 @@ class SourcesSpec extends SparkSpecBase {
   test("events.ts TIMESTAMP(NANOS): integer ns→µs on the first and the cached read") {
     // row 2 is ...456999 ns: double division would round it up to ...457 µs
     eventsMicros("events_nanos").foreach(got => assert(got == fixtureMicros))
+  }
+
+  test("events.ts TIMESTAMP(NANOS): the first read submits no failed Spark job") {
+    val dir = fixtureCopy("events_nanos")
+    val (got, jobs, failed) = jobRecord(spark)(micros(Tables.testTable(spark, dir, "events")))
+    assert(failed.isEmpty, s"failed jobs ${failed.mkString(", ")} of:\n${jobs.mkString("\n")}")
+    assert(jobs.nonEmpty, "the listener saw no job of the read at all")
+    assert(got == fixtureMicros)
   }
 
   test("events.ts TIMESTAMP(MICROS) is never divided by 1000") {

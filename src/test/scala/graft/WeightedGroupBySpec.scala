@@ -1,11 +1,18 @@
 package graft
 
-import graft.core.WeightedDataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.types._
+
+import graft.core.{AlignedCorr, WeightedDataFrame}
 
 /** Grouped weighted aggregations — goldens from
   * /root/reference/tests/test_frame.py:114-302 and test_series.py:165-231.
   */
-class WeightedGroupBySpec extends SparkSpecBase {
+class WeightedGroupBySpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def groupedDf =
@@ -206,5 +213,71 @@ class WeightedGroupBySpec extends SparkSpecBase {
     val g = WeightedDataFrame.wt(d, "weights").groupBy("Group").select("Value")
     val got = g.sum().collect()
     assert(got.head.schema.fieldNames.toSeq == Seq("Group", "Value"))
+  }
+
+  /** Runs `body` with `confs` set on the session, restoring them after. */
+  private def withConfs[A](confs: (String, String)*)(body: => A): A = {
+    val conf = spark.conf
+    val saved = confs.map { case (k, _) => k -> conf.getOption(k) }
+    confs.foreach { case (k, v) => conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
+  /** (range-partition exchanges, global sorts) in the executed plan of a
+    * collected result, looking through adaptive query stages. */
+  private def globalSortNodes(df: DataFrame): (Int, Int) = {
+    val plan: SparkPlan = df.queryExecution.executedPlan
+    (collect(plan) { case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e }.size,
+      collect(plan) { case s: SortExec if s.global => s }.size)
+  }
+
+  test("sorted grouped output: one partition for a small input ≡ the range sort, row for row") {
+    // "ｚ" (U+FF5A) sorts before "😀" (U+1F600) in Spark's UTF-8 order and
+    // after it in Java's UTF-16 order; a NULL key kept by dropna=false
+    // sorts first; ("😀", 2) and ("😀", 1) order on the second key
+    val groups = Seq[(String, Int)](("😀", 2), (null, 1), ("ｚ", 1), ("😀", 1))
+    val schema = StructType(Seq(StructField("g", StringType), StructField("h", IntegerType),
+      StructField("ix", LongType), StructField("a", DoubleType), StructField("b", DoubleType),
+      StructField("w", DoubleType)))
+    val rows = (0 until 12).map { r =>
+      val (g, h) = groups(r % groups.size)
+      Row(g, h, r.toLong, ((r * 7) % 5).toDouble, ((r * 3) % 7).toDouble, 1.0 + r % 3)
+    }
+    // a local Seq: a known size, so the small side takes the one-partition sort
+    val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val right = spark.createDataFrame(java.util.Arrays.asList(
+      (0 until 12).map(r => Row(r.toLong, ((r * 5) % 11).toDouble)): _*),
+      StructType(Seq(StructField("ix", LongType), StructField("r", DoubleType))))
+    val calls: Seq[(String, () => DataFrame)] = {
+      def g = WeightedDataFrame.wt(df.drop("ix"), "w").groupBy(Seq("g", "h"), dropna = false)
+      Seq(
+        "count" -> (() => g.count()),
+        "sum" -> (() => g.sum()),
+        "var" -> (() => g.variance()),
+        "corr" -> (() => g.corr()),
+        "corrMelted" -> (() => g.corrMelted()),
+        "cov" -> (() => g.cov()),
+        "mode" -> (() => g.mode("a")),
+        "groupKeys" -> (() => g.groupKeys()),
+        "corrByGroup" -> (() => AlignedCorr.corrByGroup(WeightedDataFrame.wt(df, "w"),
+          Seq("g", "h"), "a", right, "r", Seq("ix"), dropna = false)))
+    }
+    withConfs("spark.sql.shuffle.partitions" -> "8",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      for ((what, call) <- calls) {
+        val small = call()
+        val smallRows = small.collect().toSeq
+        val large = withConfs("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1")(call())
+        val largeRows = large.collect().toSeq
+        assert(smallRows.nonEmpty && smallRows.head.isNullAt(0), what)
+        assert(smallRows == largeRows, what)
+        assert(globalSortNodes(small) == (0, 0), s"$what:\n${small.queryExecution.executedPlan}")
+        assert(globalSortNodes(large) == (1, 1), s"$what:\n${large.queryExecution.executedPlan}")
+      }
+    }
   }
 }
