@@ -47,8 +47,7 @@ object AlignedCorr {
     * guard yields NULL for the group.
     *
     * Rows come sorted by the keys through [[WeightedGroupBy.sortedByKeys]],
-    * bounded by the left frame's size: one partition when it is small, a
-    * global range sort otherwise.
+    * bounded by the summed size estimates of both frames.
     */
   def corrByGroup(
       left: WeightedDataFrame,
@@ -66,9 +65,11 @@ object AlignedCorr {
     val r = right.select((on :+ rightVal).map(c =>
       WeightedDataFrame.numericCol(right, c).as(c)): _*)
     val j = l.join(r, on, "left")
-    // bounded by `l`, not by the join: Spark estimates a join as the
-    // product of its sides, and the result has at most one row per `l` row
-    WeightedGroupBy.sortedByKeys(l, j.groupBy(keys.map(col): _*)
+    // bounded by both sides, not by the join, which Spark estimates as the
+    // product of its sides: the result has at most one row per `l` row, and
+    // with `on` within `keys` no exchange parts the join from the aggregate,
+    // so `coalesce(1)` would also run the join in one task
+    WeightedGroupBy.sortedByKeys(Seq(l, r), j.groupBy(keys.map(col): _*)
       .agg(WeightedMoments.corrExpr(
         WeightedDataFrame.numericCol(left.df, leftVal), col(rightVal), col(left.weightName),
         ddof, minPeriods).as("corr")), keys.map(col))

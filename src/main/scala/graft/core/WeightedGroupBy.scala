@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan, ObjectProducer}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.unsafe.types.UTF8String
@@ -14,9 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * `dropna=true` drops null-key rows and `sort=true` orders the result by the
   * keys, matching the pandas groupby defaults (`frame.py:134-159`). The
-  * order comes from [[WeightedGroupBy.sortedByKeys]]: a small input's
-  * result is sorted inside one partition, a large one's by a global range
-  * sort.
+  * order comes from [[WeightedGroupBy.sortedByKeys]], which sorts a result
+  * inside one partition when Spark's size estimate of the input allows it,
+  * and by a global range sort otherwise.
   */
 final class WeightedGroupBy private[core] (
     wdf: WeightedDataFrame,
@@ -43,7 +44,7 @@ final class WeightedGroupBy private[core] (
   /** `out` in key order when `sort` is set, through
     * [[WeightedGroupBy.sortedByKeys]] bounded by [[base]]. */
   private def sorted(out: DataFrame, by: Seq[String] = keys, cellsPerRow: Long = 1): DataFrame =
-    if (sort) WeightedGroupBy.sortedByKeys(base, out, by.map(col), cellsPerRow) else out
+    if (sort) WeightedGroupBy.sortedByKeys(Seq(base), out, by.map(col), cellsPerRow) else out
 
   /** Cells per group of the long-format corr/cov: k² over the numeric
     * columns. */
@@ -128,8 +129,8 @@ final class WeightedGroupBy private[core] (
     * `(col_x, col_y)`. `sort` then sorts the per-group aggregate rows by
     * key, before `explode`: the same row order as sorting the cells by
     * `(keys, col_x, col_y)`, on k² times fewer rows. Each of those rows
-    * carries k² cells, so the one-partition bound of
-    * [[WeightedGroupBy.sortedByKeys]] is the input estimate times k². */
+    * carries k² cells, so [[WeightedGroupBy.sortedByKeys]] bounds them by
+    * the input estimate times k². */
   private def narrowCells(name: String, stat: Column => Column): DataFrame = {
     requireKeysFree(Seq("cells", "cell", "col_x", "col_y", name))
     val cols = numericAggCols.sortBy(UTF8String.fromString)
@@ -442,26 +443,60 @@ object WeightedGroupBy {
 
   /** `out` ordered by `keys`: the one place that decides how a keyed
     * result is ordered. `out` must hold at most `cellsPerRow` rows per row
-    * of `input`, as a grouped result does.
+    * of its `inputs`, as a grouped result does.
     *
-    * When Spark's size estimate of `input` (from the analyzed plan, no job)
-    * times `cellsPerRow` is at most `spark.sql.adaptive.advisoryPartitionSizeInBytes`,
-    * the result is sorted inside one partition. AQE already reads the
-    * aggregate shuffle of an input that small as one partition, so this
-    * costs no parallelism, and it drops the global sort's range-partition
-    * sampling job and its extra shuffle: a grouped call runs 2 jobs, not 4.
-    * A larger input, or one of unknown size (estimated at
-    * `spark.sql.defaultSizeInBytes`, as for an RDD), keeps the global range
-    * sort, so no result of unbounded size is sorted in one partition. */
+    * A global `orderBy` costs a range-partition sampling job, which also
+    * evaluates the plan below the sort a second time, and one more shuffle.
+    * Spark's size estimate of the `inputs` (summed, from the analyzed plans,
+    * no job) times `cellsPerRow` picks one of three sorts:
+    *  - at most the size up to which AQE reads a shuffle as one partition
+    *    (`spark.sql.adaptive.coalescePartitions.minPartitionSize` when
+    *    `coalescePartitions.parallelismFirst` is on, Spark's default; else
+    *    `spark.sql.adaptive.advisoryPartitionSizeInBytes`):
+    *    `coalesce(1).sortWithinPartitions`. The aggregate's final stage, and
+    *    a join feeding it with no exchange in between, run in that one task:
+    *    a grouped call runs 2 jobs, not 4.
+    *  - at most `advisoryPartitionSizeInBytes`, so the result fits the
+    *    partition size AQE aims for: `repartition(1).sortWithinPartitions`.
+    *    The aggregate keeps AQE's parallelism and only the result moves to
+    *    one task: 3 jobs.
+    *  - larger: the global range sort.
+    *
+    * The input estimate stands in for the aggregate's shuffle, whose size is
+    * known only at run time, so just under the first bound the final stage
+    * can run in one task where AQE would have split it in two or more. The
+    * estimate is Spark's, not an upper bound: a file source counts its
+    * on-disk (compressed) bytes. An input whose plan can emit more rows than
+    * it reads ([[multipliesRows]]), or one of unknown size (estimated at
+    * `spark.sql.defaultSizeInBytes`, as for an RDD), keeps the range sort. */
   private[core] def sortedByKeys(
-      input: DataFrame,
+      inputs: Seq[DataFrame],
       out: DataFrame,
       keys: Seq[Column],
       cellsPerRow: Long = 1): DataFrame = {
-    val estimate = input.queryExecution.analyzed.stats.sizeInBytes * cellsPerRow
+    val plans = inputs.map(_.queryExecution.analyzed)
+    val estimate =
+      if (plans.exists(_.exists(multipliesRows))) None
+      else Some(plans.map(_.stats.sizeInBytes).sum * cellsPerRow)
+    val conf = out.sparkSession.sessionState.conf
+    val advisory = conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
     val onePartition =
-      input.sparkSession.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-    if (estimate <= onePartition) out.coalesce(1).sortWithinPartitions(keys: _*)
-    else out.orderBy(keys: _*)
+      if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST))
+        conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+      else advisory
+    estimate match {
+      case Some(e) if e <= onePartition => out.coalesce(1).sortWithinPartitions(keys: _*)
+      case Some(e) if e <= advisory => out.repartition(1).sortWithinPartitions(keys: _*)
+      case _ => out.orderBy(keys: _*)
+    }
+  }
+
+  /** A node that can emit more rows than it reads: `explode` and the other
+    * generators, and the typed object operators (`flatMap`,
+    * `flatMapGroups`, `cogroup`, ...). Spark's size estimate passes the
+    * child's size through them, so it bounds nothing above them. */
+  private def multipliesRows(p: LogicalPlan): Boolean = p match {
+    case _: Generate | _: ObjectProducer => true
+    case _ => false
   }
 }

@@ -1,10 +1,11 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, RangePartitioning}
 import org.apache.spark.sql.execution.{SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions.{array, col, explode}
 import org.apache.spark.sql.types._
 
 import graft.core.{AlignedCorr, WeightedDataFrame}
@@ -227,18 +228,26 @@ class WeightedGroupBySpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     }
   }
 
-  /** (range-partition exchanges, global sorts) in the executed plan of a
-    * collected result, looking through adaptive query stages. */
-  private def globalSortNodes(df: DataFrame): (Int, Int) = {
+  /** (range-partition exchanges, single-partition exchanges, global sorts)
+    * in the executed plan of a collected result, looking through adaptive
+    * query stages. */
+  private def sortShape(df: DataFrame): (Int, Int, Int) = {
     val plan: SparkPlan = df.queryExecution.executedPlan
-    (collect(plan) { case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e }.size,
+    def exchanges(p: Partitioning => Boolean) =
+      collect(plan) { case e: ShuffleExchangeExec if p(e.outputPartitioning) => e }.size
+    (exchanges(_.isInstanceOf[RangePartitioning]),
+      exchanges(p => !p.isInstanceOf[RangePartitioning] && p.numPartitions == 1),
       collect(plan) { case s: SortExec if s.global => s }.size)
   }
+  private val OnePartition = (0, 0, 0)
+  private val SinglePartitionShuffle = (0, 1, 0)
+  private val RangeSort = (1, 0, 1)
 
-  test("sorted grouped output: one partition for a small input ≡ the range sort, row for row") {
-    // "ｚ" (U+FF5A) sorts before "😀" (U+1F600) in Spark's UTF-8 order and
-    // after it in Java's UTF-16 order; a NULL key kept by dropna=false
-    // sorts first; ("😀", 2) and ("😀", 1) order on the second key
+  /** 12 rows in 4 groups of two keys `(g, h)`, from a local Seq so their
+    * size is known. "ｚ" (U+FF5A) sorts before "😀" (U+1F600) in Spark's
+    * UTF-8 order and after it in Java's UTF-16 order; a NULL `g`, kept by
+    * dropna=false, sorts first; ("😀", 2) and ("😀", 1) order on `h`. */
+  private def sortCaseFrame: DataFrame = {
     val groups = Seq[(String, Int)](("😀", 2), (null, 1), ("ｚ", 1), ("😀", 1))
     val schema = StructType(Seq(StructField("g", StringType), StructField("h", IntegerType),
       StructField("ix", LongType), StructField("a", DoubleType), StructField("b", DoubleType),
@@ -247,11 +256,22 @@ class WeightedGroupBySpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
       val (g, h) = groups(r % groups.size)
       Row(g, h, r.toLong, ((r * 7) % 5).toDouble, ((r * 3) % 7).toDouble, 1.0 + r % 3)
     }
-    // a local Seq: a known size, so the small side takes the one-partition sort
-    val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  /** One value `r` per group key `(g, h)` of [[sortCaseFrame]]. */
+  private val keyedRightSchema = StructType(Seq(StructField("g", StringType),
+    StructField("h", IntegerType), StructField("r", DoubleType)))
+  private val keyedRightRows = Seq(Row("😀", 2, 3.0), Row(null, 1, 1.0), Row("ｚ", 1, 4.0),
+    Row("😀", 1, 2.0))
+
+  test("sorted grouped output: one partition for a small input ≡ a single-partition shuffle ≡ the range sort, row for row") {
+    val df = sortCaseFrame
     val right = spark.createDataFrame(java.util.Arrays.asList(
       (0 until 12).map(r => Row(r.toLong, ((r * 5) % 11).toDouble)): _*),
       StructType(Seq(StructField("ix", LongType), StructField("r", DoubleType))))
+    val keyedRight =
+      spark.createDataFrame(java.util.Arrays.asList(keyedRightRows: _*), keyedRightSchema)
     val calls: Seq[(String, () => DataFrame)] = {
       def g = WeightedDataFrame.wt(df.drop("ix"), "w").groupBy(Seq("g", "h"), dropna = false)
       Seq(
@@ -264,20 +284,61 @@ class WeightedGroupBySpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
         "mode" -> (() => g.mode("a")),
         "groupKeys" -> (() => g.groupKeys()),
         "corrByGroup" -> (() => AlignedCorr.corrByGroup(WeightedDataFrame.wt(df, "w"),
-          Seq("g", "h"), "a", right, "r", Seq("ix"), dropna = false)))
+          Seq("g", "h"), "a", right, "r", Seq("ix"), dropna = false)),
+        // `on` = the keys: no exchange parts the join from the aggregate
+        "corrByGroup on keys" -> (() => AlignedCorr.corrByGroup(WeightedDataFrame.wt(df, "w"),
+          Seq("g", "h"), "a", keyedRight, "r", Seq("g", "h"), dropna = false)))
     }
     withConfs("spark.sql.shuffle.partitions" -> "8",
         "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
       for ((what, call) <- calls) {
+        // the estimate (under 1 KB) fits AQE's one-partition size; above a
+        // 1-byte minPartitionSize it still fits the advisory size; above both
+        // it takes the range sort
         val small = call()
+        val mid =
+          withConfs("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1")(call())
+        val large = withConfs("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1",
+          "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1")(call())
         val smallRows = small.collect().toSeq
-        val large = withConfs("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1")(call())
-        val largeRows = large.collect().toSeq
         assert(smallRows.nonEmpty && smallRows.head.isNullAt(0), what)
-        assert(smallRows == largeRows, what)
-        assert(globalSortNodes(small) == (0, 0), s"$what:\n${small.queryExecution.executedPlan}")
-        assert(globalSortNodes(large) == (1, 1), s"$what:\n${large.queryExecution.executedPlan}")
+        for ((side, df, shape) <- Seq(("small", small, OnePartition),
+            ("mid", mid, SinglePartitionShuffle), ("large", large, RangeSort))) {
+          assert(df.collect().toSeq == smallRows, s"$what $side")
+          assert(sortShape(df) == shape, s"$what $side:\n${df.queryExecution.executedPlan}")
+        }
       }
     }
+  }
+
+  test("sorted grouped output: the one-partition bound is AQE's, and an unbounded input keeps the range sort") {
+    val df = sortCaseFrame
+    def count(in: DataFrame): DataFrame = {
+      val out = WeightedDataFrame.wt(in.drop("ix"), "w").groupBy(Seq("g", "h"), dropna = false)
+        .count()
+      out.collect()
+      out
+    }
+    // the frame's estimate (under 1 KB) lies between a 64-byte minPartitionSize and
+    // the 64 MB advisory size: parallelismFirst (Spark's default) reads a
+    // shuffle as one partition only up to minPartitionSize, so the aggregate
+    // stays parallel and only the result moves to one partition; without it
+    // AQE packs up to the advisory size
+    withConfs("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64") {
+      assert(sortShape(count(df)) == SinglePartitionShuffle)
+      withConfs("spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false") {
+        assert(sortShape(count(df)) == OnePartition)
+      }
+    }
+    // explode doubles the rows but passes the child's size estimate through
+    val exploded = df.withColumn("a", explode(array(col("a"), col("a") + 1)))
+    assert(sortShape(count(exploded)) == RangeSort)
+    // a right frame of unknown size (RDD-built), joined on the keys
+    val unknownRight = spark.createDataFrame(spark.sparkContext.parallelize(keyedRightRows, 2),
+      keyedRightSchema)
+    val byKeys = AlignedCorr.corrByGroup(WeightedDataFrame.wt(df, "w"), Seq("g", "h"), "a",
+      unknownRight, "r", Seq("g", "h"), dropna = false)
+    byKeys.collect()
+    assert(sortShape(byKeys) == RangeSort, byKeys.queryExecution.executedPlan)
   }
 }
